@@ -10,7 +10,7 @@ Server delegates to ``io.*``:
     do_put(path=name, batches)          do_put → Store.make_table
     do_get(ticket "a:b:c")              do_get → Store.read_table
     do_exchange(search command)         do_exchange → Store.search /
-                                        batch_probe_search (N targets)
+                                        batch_knn_brute (N targets)
     make-coder / make-index actions     same action names → Store
     drop-table / drop-index / remove    same
     set/del-coding/column/filter/select same names, but per-PEER state
@@ -48,9 +48,10 @@ it) into a hidden dir, streamed batch-wise, then removed. In both paths the driv
 sized to ``Server.get_budget_bytes``; a single batch that exceeds the
 budget even at one row (a giant binary cell) raises loudly instead of
 OOMing. ``do_put`` flushes under ``put_flush_bytes``; ``do_exchange``
-runs the k-NN on the CLUSTER (partition-pruned probe search / batched
-cell equi-join) and only the top-k × ``exchange_max_targets`` rows
-ever reach the driver.
+runs the k-NN on the CLUSTER (one target: partition-pruned probe
+search; N targets: one scan of the union of their probed cells through
+the batch GEMM kernel, each target masked to its own cells) and only
+the top-k × ``exchange_max_targets`` rows ever reach the driver.
 
 Security boundary: table/coder names are validated as single path
 segments at the catalog chokepoint (``catalog.check_name``) so wire
@@ -243,6 +244,26 @@ def _normalize_arrow(table):
         cols.append(col)
         fields.append(f)
     return pa.table(dict(zip([f.name for f in fields], cols)))
+
+
+def _budget_slices(batch, budget: int):
+    """Yield ``batch`` as zero-copy slices of at most ``budget`` Arrow
+    bytes each, sized from the batch's own measured bytes per row
+    (uneven rows re-split the same way). Raises when a single row is
+    past the budget: no slicing can meet it."""
+    if batch.nbytes <= budget:
+        yield batch
+        return
+    if batch.num_rows == 1:
+        raise ValueError(
+            f"do_get: a single row is {batch.nbytes} bytes, past "
+            f"get_budget_bytes={budget}; raise the budget or select "
+            "narrower columns"
+        )
+    per_row = -(-batch.nbytes // batch.num_rows)
+    step = max(1, budget // per_row)  # < num_rows: the batch is over budget
+    for lo in range(0, batch.num_rows, step):
+        yield from _budget_slices(batch.slice(lo, step), budget)
 
 
 def _token_middleware(fl, token: str):
@@ -813,8 +834,10 @@ class Server:
         """Yield record batches from a pyarrow dataset, each cast to
         the Spark-derived wire schema, each bounded by
         ``get_budget_bytes`` on the driver. Rows-per-batch is sized
-        from the files' own uncompressed row width; a batch that still
-        exceeds the budget (even at one row) raises loudly.
+        from the files' own uncompressed row width, which can
+        underestimate the Arrow width; a batch that still exceeds the
+        budget is sliced (``_budget_slices``), and a single row past
+        the budget raises loudly.
 
         ``flt``/``columns`` are a PUSHED filter expression / column
         projection (_direct_plan): the filter prunes fragments first —
@@ -886,19 +909,12 @@ class Server:
                     # Spark's order
                     if batch.schema.names != schema.names:
                         batch = batch.select(schema.names)
-                    batch = batch.cast(schema)
-                    stats["batches"] += 1
-                    stats["max_batch_bytes"] = max(
-                        stats["max_batch_bytes"], batch.nbytes
-                    )
-                    if batch.nbytes > budget:
-                        raise ValueError(
-                            f"do_get: a single {batch.num_rows}-row batch is "
-                            f"{batch.nbytes} bytes, past get_budget_bytes="
-                            f"{budget}; raise the budget or select narrower "
-                            "columns"
+                    for piece in _budget_slices(batch.cast(schema), budget):
+                        stats["batches"] += 1
+                        stats["max_batch_bytes"] = max(
+                            stats["max_batch_bytes"], piece.nbytes
                         )
-                    yield batch
+                        yield piece
         finally:
             if spool is not None:
                 shutil.rmtree(spool, ignore_errors=True)
@@ -1036,12 +1052,10 @@ class Server:
             self._stream_batches(data, schema, spool, flt=flt, columns=cols),
         )
 
-    # Batched-search knobs, overridable per server (previously the
-    # operators' constants): the loud bound on a do_exchange query set
-    # (driver holds N×k result rows + broadcasts the N×d query matrix)
-    # and the Arrow-batch chunking of the brute GEMM fast path.
+    # The loud bound on a do_exchange query set, overridable per server:
+    # the driver holds N×k result rows and broadcasts the N×d query
+    # matrix, and wire clients are untrusted.
     exchange_max_targets: int = 1024
-    exchange_chunk_rows: int = 2048
 
     def _do_exchange(self, descriptor, reader, writer) -> None:
         spec = json.loads(descriptor.command.decode())
@@ -1060,6 +1074,11 @@ class Server:
         flt = spec.get("filter")
         source, column = spec["source"], spec["column"]
         metric = spec.get("metric", "l2")
+        probes = spec.get("probes")
+        if probes is not None:
+            probes = int(probes)
+            if probes < 0:
+                raise ValueError(f"do_exchange: probes must be >= 0 (got {probes})")
         common = dict(
             metric=metric,
             filter=_wire_filter(flt) if flt else None,
@@ -1067,60 +1086,35 @@ class Server:
             maxval=k,
             id_col=spec.get("id_col"),
         )
-        if coding is not None and len(targets) > 1:
-            # the batched scale path: one cell equi-join plan for ALL
-            # targets, never a per-target driver loop
-            from fenix_spark.operators.index import batch_probe_search
-
-            indexed = self.store.read_table(source, coding=coding, column=column)
-            if common["filter"] is not None:
-                indexed = indexed.where(common["filter"])
-            queries = self.spark.createDataFrame(
-                [(i, t) for i, t in enumerate(targets)],
-                f"__qid bigint, {column} array<double>",
-            )
-            rid = spec.get("id_col") or "vec_id"
-            out = (
-                batch_probe_search(
-                    queries,
-                    indexed,
-                    self.store.read_coder(coding),
-                    column,
-                    metric=metric,
-                    k=k,
-                    probes=int(spec.get("probes") or 8),
-                    query_id="__qid",
-                    right_id=rid,
-                )
-                .withColumnRenamed("query_id", "query_index")
-                # one wire schema across the multi-target branches: the
-                # id column keeps its REAL name, never 'right_id'
-                .withColumnRenamed("right_id", rid)
-            )
-            sel = spec.get("select")
-            if sel:
-                # N×k result rows — joining the selected columns back
-                # is a broadcast join; re-sorted after (joins drop it).
-                # Without this the batched path silently swallowed the
-                # select spec the other two branches honor.
-                out = out.join(indexed.select(rid, *sel), rid).orderBy(
-                    "query_index", "rank"
-                )
-        elif coding is None and len(targets) > 1:
-            # brute multi-target: ONE corpus scan with the query matrix
-            # broadcast (operators.search.batch_knn_brute) — no
-            # per-target plan loop; its max_targets cap stays the loud
-            # bound for absurd query sets (use an index instead)
+        if len(targets) > 1:
+            # ONE corpus scan for ALL targets, the query matrix
+            # broadcast into a per-partition GEMM
+            # (operators.search.batch_knn_brute) — never a per-target
+            # plan loop. With an index, each target's cells are ranked
+            # on the driver exactly as probe_search ranks them
+            # (probes=None or >= all cells: exact; 0: no cells), and
+            # the kernel scans only the union of the probed cells.
             from fenix_spark.operators.search import batch_knn_brute
 
-            corpus = self.store.read_table(source)
+            probe_cells = None
+            if coding is None:
+                corpus = self.store.read_table(source)
+            else:
+                from fenix_spark.operators.coder import coding_to_numpy, rank_cells
+
+                corpus = self.store.read_table(source, coding=coding, column=column)
+                coder = self.store.read_coder(coding)
+                _, _, kk, n = coding_to_numpy(coder)
+                if probes is not None and probes < kk**n:
+                    probe_cells = [
+                        rank_cells(coder, t, metric, limit=probes) for t in targets
+                    ]
             if common["filter"] is not None:
                 corpus = corpus.where(common["filter"])
             rid = spec.get("id_col") or "vec_id"
             out = batch_knn_brute(
                 corpus, column, targets, metric=metric, k=k, right_id=rid,
-                max_targets=self.exchange_max_targets,
-                chunk_rows=self.exchange_chunk_rows,
+                max_targets=self.exchange_max_targets, probe_cells=probe_cells,
             )
             sel = spec.get("select")
             if sel:
@@ -1134,8 +1128,7 @@ class Server:
             parts = []
             for i, t in enumerate(targets):
                 one = self.store.search(
-                    source, column, t, coding=coding,
-                    probes=spec.get("probes"), **common,
+                    source, column, t, coding=coding, probes=probes, **common,
                 )
                 parts.append(one.select(F.lit(i).alias("query_index"), "*"))
             out = parts[0]

@@ -274,6 +274,7 @@ def batch_knn_brute(
     round_to: int | None = None,
     max_targets: int = 1024,
     chunk_rows: int = 2048,
+    probe_cells: Sequence[Sequence[int]] | None = None,
 ) -> DataFrame:
     """Exact k-NN for MANY query vectors in ONE corpus scan — the
     TRANSPOSE of ``similarity_join_brute``: there the RIGHT side
@@ -289,6 +290,21 @@ def batch_knn_brute(
     the scan each chunk is sorted by id and selected with a STABLE
     argsort, so equal-distance candidates survive in id order; the
     per-partition merge and the final window order by (distance, id).
+
+    IVF probe search: ``probe_cells`` (one list of joint cell ids per
+    target, e.g. ``coder.rank_cells(..., limit=probes)``) makes
+    ``corpus`` an INDEXED table and each target's answer the exact
+    top-k over its own cells only — ``index.probe_search`` for many
+    targets in one pass. The scan is filtered to ``__CODED_ID__ IN``
+    the union of all probed cells (partition pruning), each row's cell
+    rides into the kernel, and a (row, target) pair outside that
+    target's cells gets distance +inf before the stable argsort. The
+    mask is indexed by position in the sorted union, so it costs
+    |union| × N booleans however large the codebook. Masked
+    candidates are dropped at emission: a target whose cells hold
+    fewer than k rows returns fewer rows, as ``probe_search`` does (a
+    pair at a genuinely infinite distance is dropped with them).
+    ``probe_cells=None`` searches every row.
 
     Output: (query_index, <right_id>, <dist_col>, rank), rank 1..k per
     query_index = position in ``targets``.
@@ -310,7 +326,23 @@ def batch_knn_brute(
     if metric not in ("l2", "euclidean", "cosine", "dot", "inner_product"):
         raise ValueError(f"unknown metric {metric!r}")
     spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast(tmat)
+    cells = allowed = None
+    if probe_cells is not None:
+        from fenix_spark.operators.index import CODE_COL
+
+        if len(probe_cells) != n_q:
+            raise ValueError(
+                f"probe_cells needs one cell list per target "
+                f"(got {len(probe_cells)} for {n_q} targets)"
+            )
+        per_q = [np.asarray(c, dtype="int64") for c in probe_cells]
+        cells = np.unique(np.concatenate(per_q))
+        # allowed[p, q]: target q probes cell cells[p]
+        allowed = np.zeros((len(cells), n_q), dtype=bool)
+        for q, c in enumerate(per_q):
+            allowed[np.searchsorted(cells, c), q] = True
+        corpus = corpus.where(F.col(CODE_COL).isin(cells.tolist()))
+    bc = spark.sparkContext.broadcast((tmat, cells, allowed))
     # id column keeps its real Spark type (string ids are as common as
     # bigints in document corpora)
     id_type = corpus.schema[right_id].dataType.simpleString()
@@ -324,7 +356,7 @@ def batch_knn_brute(
     reduce_at = max(64, 8 * k)
 
     def gen(batches):
-        t = bc.value
+        t, cells_b, allowed_b = bc.value
         t_sq = (t * t).sum(axis=1)
         t_norm = np.sqrt(t_sq)
         # per-query candidate buffers across the partition's chunks
@@ -368,6 +400,9 @@ def batch_knn_brute(
                     dmat = -gram
                 if round_to is not None:
                     dmat = dmat.round(round_to) + 0.0
+                if cells_b is not None:
+                    pos = np.searchsorted(cells_b, part["__cell"].to_numpy())
+                    dmat[~allowed_b[pos]] = np.inf
                 kk = min(k, len(cids))
                 # rows are id-sorted, so the STABLE sort keeps
                 # equal-distance candidates in ascending-id order
@@ -382,10 +417,14 @@ def batch_knn_brute(
         all_d, all_i = cand_d[0], cand_i[0]  # k×N after the reduce
         out_q, out_i, out_d, out_r = [], [], [], []
         for q in range(all_d.shape[1]):
-            out_q.extend([q] * all_d.shape[0])
-            out_i.extend(all_i[:, q])
-            out_d.extend(all_d[:, q])
-            out_r.extend(range(1, all_d.shape[0] + 1))
+            d_q, i_q = all_d[:, q], all_i[:, q]
+            if cells_b is not None:
+                keep = d_q != np.inf
+                d_q, i_q = d_q[keep], i_q[keep]
+            out_q.extend([q] * len(d_q))
+            out_i.extend(i_q)
+            out_d.extend(d_q)
+            out_r.extend(range(1, len(d_q) + 1))
         yield pd.DataFrame(
             {
                 "query_index": np.asarray(out_q, dtype="int32"),
@@ -395,9 +434,12 @@ def batch_knn_brute(
             }
         )
 
-    src = corpus.select(
-        F.col(right_id).alias("__rid"), vec_double(column).alias("__vec")
-    ).where(F.col("__vec").isNotNull())  # null vectors match nothing, like knn
+    cols = [F.col(right_id).alias("__rid"), vec_double(column).alias("__vec")]
+    if cells is not None:
+        cols.append(F.col(CODE_COL).alias("__cell"))
+    src = corpus.select(*cols).where(
+        F.col("__vec").isNotNull()  # null vectors match nothing, like knn
+    )
     partial = src.mapInPandas(gen, out_schema)
     w = Window.partitionBy("query_index").orderBy(
         F.col(dist_col).asc(), F.col(right_id).asc()

@@ -187,6 +187,118 @@ def test_brute_target_flood_is_loud(served, vectors):
         client.search([one] * 1100, "vecs", "embedding", maxval=2)
 
 
+@pytest.fixture(scope="module")
+def labeled(served, embeddings):
+    """300 labelled vectors indexed into 16 joint cells (two 4-cell
+    codebooks). Returns targets between pairs of rows: a self-match's
+    GEMM distance is ~1e-8, not 0, and fails any relative tolerance."""
+    _, client, _ = served
+    rows = embeddings.orderBy("vec_id").limit(300).collect()
+    client.make_table("labeled", pa.table({
+        "vec_id": [r["vec_id"] for r in rows],
+        "label": [r["label"] for r in rows],
+        "embedding": [list(r["embedding"]) for r in rows],
+    }))
+    client.make_index(
+        "code16", "labeled", "embedding",
+        config={"metric": "l2", "codebook_size": 4, "num_codebooks": 2, "seed": 7},
+    )
+    return [
+        [(a + b) / 2 for a, b in zip(rows[i]["embedding"], rows[i + 150]["embedding"])]
+        for i in range(6)
+    ]
+
+
+def _batch_equals_store(spark, root, got, targets, filter=None, **kw):  # noqa: A002
+    """Every batch row equals the one-target ``Store.search`` for its
+    target: ids exactly, distances to rtol 1e-9. Returns the batch
+    rows per query_index."""
+    import numpy as np
+
+    by_q: dict = {}
+    for r in got.sort_by([("query_index", "ascending"), ("rank", "ascending")]).to_pylist():
+        by_q.setdefault(r["query_index"], []).append(r)
+    st = Store(spark, root)
+    for qi, t in enumerate(targets):
+        want = st.search(
+            "labeled", "embedding", t, id_col="vec_id",
+            filter=F.expr(filter) if filter else None, **kw,
+        ).collect()
+        rows = by_q.get(qi, [])
+        assert [r["vec_id"] for r in rows] == [r["vec_id"] for r in want], qi
+        np.testing.assert_allclose(
+            [r["__DISTANCE__"] for r in rows],
+            [r["__DISTANCE__"] for r in want],
+            rtol=1e-9,
+        )
+    return by_q
+
+
+@pytest.mark.parametrize("probes", [None, 0])
+def test_batch_probes_semantics_match_one_target(spark, served, labeled, probes):
+    """``probes`` means the same with 3 targets as with 1: omitted =
+    every cell (exact), 0 = no cell (empty answers)."""
+    _, client, root = served
+    targets = labeled[:3]
+    got = client.search(
+        targets, "labeled", "embedding", coding="code16", maxval=4,
+        probes=probes, id_col="vec_id",
+    )
+    by_q = _batch_equals_store(
+        spark, root, got, targets, coding="code16", maxval=4, probes=probes
+    )
+    assert got.num_rows == (12 if probes is None else 0)
+    with pytest.raises((fl.FlightServerError, pa.lib.ArrowInvalid), match="probes"):
+        client.search(targets, "labeled", "embedding", coding="code16", probes=-1)
+
+
+def test_pruned_batch_ivf_with_filter_and_select_over_the_wire(
+    spark, served, labeled
+):
+    """A batched IVF call probing 4 of 16 cells, with a filter and a
+    select: each target equals its one-target search, and a target
+    whose filtered probed cells hold fewer than maxval rows gets a
+    short answer drawn only from its own probed cells."""
+    from fenix_spark.operators.coder import rank_cells
+
+    _, client, root = served
+    targets, k, flt = labeled, 5, "label = 2"
+    got = client.search(
+        targets, "labeled", "embedding", coding="code16", maxval=k,
+        probes=4, filter=flt, select=["label"], id_col="vec_id",
+    )
+    by_q = _batch_equals_store(
+        spark, root, got, targets, filter=flt,
+        coding="code16", maxval=k, probes=4, select=["vec_id", "label"],
+    )
+    st = Store(spark, root)
+    cell_of = {
+        r["vec_id"]: r["__CODED_ID__"]
+        for r in st.read_table("labeled", coding="code16", column="embedding")
+        .select("vec_id", "__CODED_ID__").collect()
+    }
+    coder = st.read_coder("code16")
+    short = 0
+    for qi, t in enumerate(targets):
+        probed = set(rank_cells(coder, t, "l2", limit=4))
+        rows = by_q.get(qi, [])
+        assert all(cell_of[r["vec_id"]] in probed for r in rows), qi
+        assert all(r["label"] == 2 for r in rows), qi
+        short += len(rows) < k
+    assert short >= 1  # the masked-emission path is exercised
+
+
+def test_multi_target_branches_share_one_wire_schema(served, labeled):
+    """A batched IVF call and a batched brute-force call answer with
+    the same Arrow schema (query_index int32, the real id column)."""
+    _, client, _ = served
+    kw = dict(maxval=3, id_col="vec_id")
+    ivf = client.search(labeled[:2], "labeled", "embedding", coding="code16", probes=4, **kw)
+    brute = client.search(labeled[:2], "labeled", "embedding", **kw)
+    assert ivf.schema == brute.schema
+    assert ivf.schema.field("query_index").type == pa.int32()
+
+
 def test_drop_index_drops_coder_and_indexes(spark, served, vectors):
     server, client, root = served
     st = Store(spark, root)

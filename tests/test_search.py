@@ -213,6 +213,46 @@ def test_batch_knn_brute_string_ids_and_buffer_reduction(spark):
         assert by_q[qi] == want, qi
 
 
+def test_batch_knn_brute_probe_cells_match_numpy_masked_topk(spark):
+    """With ``probe_cells`` each target's answer is the exact top-k
+    over the rows of its own cells only: ids in (distance, id) order,
+    distances to rtol 1e-9, short answers when the cells hold fewer
+    than k rows, none for a target probing no cell."""
+    from fenix_spark.operators.search import batch_knn_brute
+
+    rng = np.random.default_rng(5)
+    n, k = 400, 6
+    mat = rng.standard_normal((n, 8))
+    cell = rng.integers(0, 9, n)
+    cell[cell == 8] = 7  # cell 8 is empty
+    df = spark.createDataFrame(
+        [(i, mat[i].tolist(), int(cell[i])) for i in range(n)],
+        "vec_id bigint, embedding array<double>, __CODED_ID__ int",
+    ).repartition(3)
+    targets = rng.standard_normal((5, 8))
+    probe = [[0, 3], [5], [8], [], [1, 2, 4, 6]]
+    few = [i for i in range(n) if cell[i] == 5][k - 2 :]
+    df = df.where(~F.col("vec_id").isin(few))  # cell 5 holds k-2 rows
+    out = batch_knn_brute(
+        df, "embedding", targets.tolist(), k=k, right_id="vec_id",
+        chunk_rows=16, probe_cells=probe,  # many chunks: reductions fire
+    ).collect()
+    by_q: dict = {}
+    for r in out:
+        by_q.setdefault(r["query_index"], []).append((r["vec_id"], r[DISTANCE_COL]))
+    ids = np.setdiff1d(np.arange(n), few)
+    d = np.sqrt(((mat[ids][None, :, :] - targets[:, None, :]) ** 2).sum(axis=2))
+    for qi, cells in enumerate(probe):
+        m = np.isin(cell[ids], cells)
+        order = np.lexsort((ids[m], d[qi][m]))[:k]
+        got = by_q.get(qi, [])
+        assert [i for i, _ in got] == list(ids[m][order]), qi
+        np.testing.assert_allclose([x for _, x in got], d[qi][m][order], rtol=1e-9)
+    assert len(by_q[1]) == k - 2 and 2 not in by_q and 3 not in by_q
+    with pytest.raises(ValueError, match="one cell list per target"):
+        batch_knn_brute(df, "embedding", targets.tolist(), probe_cells=probe[:2])
+
+
 def test_batch_knn_brute_skips_null_vectors(spark):
     from fenix_spark.operators.search import batch_knn_brute
 
